@@ -33,6 +33,16 @@ Driver state is the tree list (3 trees × 7 structure fields — the
 sanctioned model-broadcast scalar class); per round the engine runs
 exactly TWO aggregate jobs (root histogram, children histogram).
 
+One descent core: :func:`_descend` is the ONLY boosting round/level
+loop in the package. It fits any set of *arms* — (fold, config)
+pairs over the nine-axis :data:`FullConfig` — with one stacked
+histogram aggregate per (round, level). The seven public trainers
+(:func:`train_gbt`, :func:`train_gbt_grid`, ext/gbt_deep's
+train_gbt_deep / train_gbt_grid_deep / train_gbt_grid_full,
+ext/gbt_cv's train_gbt_grid_cv / train_gbt_grid_full_cv) are thin
+wrappers that map their config tuples to arms; the depth-2 ones
+convert the core's heap trees with :func:`_depth2`.
+
 Determinism contract (the q_logreg_train conventions, extended to
 tree structure): probabilities det-round to 6 before the gradient;
 gradient/hessian contributions are integer micros summed exactly;
@@ -53,12 +63,15 @@ reproduced, execution re-architected.
 
 from __future__ import annotations
 
+import hashlib
 import math
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.scoring import SCORE_FEATURES
+from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.training import _x_expr, _x_sql
 from real_time_fraud_revenue_intelligence_lakehouse_spark.functions.scalars import det_round
 
@@ -77,32 +90,24 @@ GBT_ETA = 0.3
 _MICRO = 1_000_000.0
 _R6 = "(floor(({c}) * 1000000.0 + 0.5) / 1000000.0)"
 
+#: A full-space config: (name, rounds, eta, lam, depth, subsample,
+#: colsample, min_child_weight, reg_alpha, pos_weight) — the nine
+#: axes of the reference's Optuna study (`fraud_detector.py:249-267`).
+FullConfig = tuple[str, int, float, float, int, float, float, float, float, float]
+
+#: The axes a narrower config tuple leaves out, at their no-op values:
+#: depth 2, no row/column subsampling, no mcw/L1, unit class weight.
+_FULL_DEFAULTS = (2, 1.0, 1.0, 0.0, 0.0, 1.0)
+
 
 def _r6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a CPU-bound trainer working frame to the session's full
-    parallelism when its input arrives narrower (r17, guide §2.6/§1.2
-    step 2). Used ONLY by the fold-fused CV trainers, whose stacked
-    scans carry folds × configs × features entries per row (~14M
-    generated rows/level at bench scale) — there the 4-partition fv
-    layout leaves 7/8 of a local[32] session idle and spreading
-    measured 19 vs 31 s on q_model_selection_cv_full. The single-fold
-    trainers measured FASTER without it (grid_full 5.9 vs 7-10 s,
-    depth-2 grid 2.4 vs 4.2 s: with the partial-logit __f columns
-    their scans are scheduling-bound, and 32 tasks × 2 stages per
-    tiny aggregate cost more than the 4-way compute saves) — rejected
-    there after interleaved A/B. Exact integer micro-sums make every
-    downstream histogram layout-independent, so the trees are
-    bit-identical either way (law-pinned). On a cluster whose fv
-    already carries ≥ defaultParallelism partitions this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        df = df.repartition(p)
-    return df
+def _as_full(cfg: tuple) -> FullConfig:
+    """Widen a (name, rounds, eta, lam[, depth]) grid config to the
+    nine-axis :data:`FullConfig`; full configs pass through."""
+    return (*cfg, *_FULL_DEFAULTS[len(cfg) - 4 :])
 
 
 def _compress_binned(binned: DataFrame, wide: bool = False) -> DataFrame:
@@ -125,36 +130,24 @@ def _compress_binned(binned: DataFrame, wide: bool = False) -> DataFrame:
     by the distinct vectors actually present) over the row count —
     histogram boosting's standard weighted-instance form.
 
-    The compressed frame coalesces to defaultParallelism/8 partitions
-    (override: ``spark.rtfril.gbt.compress.parts``): after the 40×
-    row cut every (round, level) histogram job is task-launch-bound,
-    and 32 shuffle partitions × 2 stages of setup cost more than the
-    remaining compute (measured on train_gbt_deep at local[32]:
-    4.9 s at 32 parts → 2.2 s at 4). The divisor keeps the setting
-    scale-adaptive — a 1000-core cluster still fans the (possibly
-    millions-of-rows) compressed frame across 125 tasks.
+    The compressed frame coalesces to defaultParallelism/8 partitions:
+    after the 40× row cut every (round, level) histogram job is
+    task-launch-bound, and 32 shuffle partitions × 2 stages of setup
+    cost more than the remaining compute (measured on train_gbt_deep
+    at local[32]: 4.9 s at 32 parts → 2.2 s at 4). The divisor keeps
+    the setting scale-adaptive — a 1000-core cluster still fans the
+    (possibly millions-of-rows) compressed frame across 125 tasks.
 
-    ``wide=True`` (the fold-fused CV trainers) keeps the frame at full
-    defaultParallelism instead: their stacks multiply every row by
-    folds × configs × features (~200 arms), so even the compressed
-    frame feeds a compute-bound generate+aggregate — there narrow
-    layouts measured 25 s vs 17 s on q_model_selection_cv_full."""
-    spark = binned.sparkSession
-    dp = spark.sparkContext.defaultParallelism
-    parts = (
-        dp
-        if wide
-        else int(
-            spark.conf.get(
-                "spark.rtfril.gbt.compress.parts",
-                str(max(1, dp // 8)),
-            )
-        )
-    )
+    ``wide=True`` (frames carrying a CV fold column) keeps the frame
+    at full defaultParallelism instead: their stacks multiply every
+    row by folds × configs × features (~200 arms), so even the
+    compressed frame feeds a compute-bound generate+aggregate — there
+    narrow layouts measured 25 s vs 17 s on q_model_selection_cv_full."""
+    dp = binned.sparkSession.sparkContext.defaultParallelism
     return (
         binned.groupBy(*binned.columns)
         .agg(F.count(F.lit(1)).alias("__cnt"))
-        .coalesce(parts)
+        .coalesce(dp if wide else max(1, dp // 8))
     )
 
 
@@ -173,15 +166,60 @@ def _bin_sql(f: str, bins: int) -> str:
     )
 
 
-def _gain(glm: int, hlm: int, gm: int, hm: int, lam: float) -> float:
+# --- deterministic sampling schedules -----------------------------------------
+
+
+def _sub_pct(subsample: float) -> int:
+    return int(round(subsample * 100))
+
+
+def col_subset(
+    features: tuple[str, ...], t: int, colsample: float | None
+) -> tuple[int, ...]:
+    """The round-``t`` eligible feature INDICES under
+    ``colsample_bytree``: rank by md5(feature || '#r<t>'), keep the
+    first max(1, floor(colsample·d)), return in ascending original
+    index order (the argmax tie-break iterates original order). Pure
+    plan-time function — engine and oracle call the same code."""
+    if colsample is None or colsample >= 1.0:
+        return tuple(range(len(features)))
+    k = max(1, math.floor(colsample * len(features)))
+    ranked = sorted(
+        range(len(features)),
+        key=lambda i: hashlib.md5(
+            f"{features[i]}#r{t}".encode()
+        ).hexdigest(),
+    )
+    return tuple(sorted(ranked[:k]))
+
+
+# --- split finding -------------------------------------------------------------
+
+
+def _thr(g_micro: int, alpha_micro: int) -> int:
+    """XGBoost's ThresholdL1 on an integer micro gradient sum — EXACT
+    integer arithmetic, identical on both engines: g−α if g>α, g+α if
+    g<−α, else 0. α=0 is the identity (the unregularized path)."""
+    if g_micro > alpha_micro:
+        return g_micro - alpha_micro
+    if g_micro < -alpha_micro:
+        return g_micro + alpha_micro
+    return 0
+
+
+def _gain(
+    glm: int, hlm: int, gm: int, hm: int, lam: float, alpha_micro: int = 0
+) -> float:
     """XGBoost split gain from integer micro-sums — the EXACT
     expression the SQL oracle writes (same operation order, so the
-    resulting doubles are bit-identical and the argmax transfers)."""
-    gl = glm / 1e6
+    resulting doubles are bit-identical and the argmax transfers).
+    Gradient sums pass ThresholdL1 first (reg_alpha,
+    `fraud_detector.py:266`); at α=0 that is the identity."""
+    gl = _thr(glm, alpha_micro) / 1e6
     hl = hlm / 1e6
-    gr = (gm - glm) / 1e6
+    gr = _thr(gm - glm, alpha_micro) / 1e6
     hr = (hm - hlm) / 1e6
-    g = gm / 1e6
+    g = _thr(gm, alpha_micro) / 1e6
     h = hm / 1e6
     return (gl * gl) / (hl + lam) + (gr * gr) / (hr + lam) - (g * g) / (h + lam)
 
@@ -199,20 +237,27 @@ def _gain_sql(glm: str, hlm: str, gm: str, hm: str, lam: float) -> str:
     )
 
 
-def _leaf_w(glm: int, hlm: int, lam: float) -> float:
-    """w = −G/(H+λ) from integer micro-sums — same text as the SQL."""
-    return -(glm / 1e6) / ((hlm / 1e6) + lam)
+def _leaf_w(glm: int, hlm: int, lam: float, alpha_micro: int = 0) -> float:
+    """w = −ThresholdL1(G)/(H+λ) from integer micro-sums — same text
+    as the SQL; α=0 is the plain −G/(H+λ)."""
+    return -(_thr(glm, alpha_micro) / 1e6) / ((hlm / 1e6) + lam)
 
 
 def _argmax_split(
     cells: list[tuple[int, int, int, int]],
-    features: tuple[str, ...],
+    active: tuple[int, ...],
     lam: float,
+    mcw_micro: int = 0,
+    alpha_micro: int = 0,
 ) -> tuple[int, int, int, int, int, int, float]:
-    """Greedy best split over histogram cells (fidx, bin, gs, hs):
-    returns (fidx, bin, gl_m, hl_m, g_m, h_m, gain). Deterministic
-    fold: strictly-greater gain wins, so ties keep the smallest
-    (fidx, bin) — matching ORDER BY gain DESC, fidx, bin LIMIT 1.
+    """Greedy best split over histogram cells (fidx, bin, gs, hs) of
+    the eligible feature indices ``active``: returns (fidx, bin, gl_m,
+    hl_m, g_m, h_m, gain). Node totals come from the smallest eligible
+    feature's cells (every row carries every feature, so any one
+    feature's cells partition the node — exact integer sums are
+    feature-independent). Deterministic fold: strictly-greater gain
+    wins, so ties keep the smallest (fidx, bin) — matching ORDER BY
+    gain DESC, fidx, bin LIMIT 1.
 
     Candidates are INTERIOR only — each feature's last occupied bin
     is excluded (its "split" sends every row left; XGBoost's
@@ -220,59 +265,466 @@ def _argmax_split(
     at r15: on a weak-signal fold a large λ can push every interior
     gain below the boundary's exact 0.0, so including the boundary
     turned an over-regularized-but-valid config into a degenerate
-    crash. A node with a single occupied bin in EVERY feature has no
-    admissible split at all → ValueError (the gated-domain
-    contract; the SQL oracles' chk CTEs error() identically)."""
-    if not cells:
-        # empty input frame (ADVICE r15): fail with the gated-domain
-        # contract, not a raw KeyError — the SQL oracles' nz guard
-        # error()s identically
-        raise ValueError(
-            "empty feature frame: GBT training needs at least one row "
-            "— outside the gated GBT domain"
-        )
+    crash. ``mcw_micro`` (min_child_weight, `fraud_detector.py:265`)
+    additionally requires both children to carry that much hessian.
+    A node with no admissible candidate → ValueError (the
+    gated-domain contract; the SQL oracles' chk CTEs error()
+    identically)."""
     by_f: dict[int, list[tuple[int, int, int]]] = {}
     for fidx, b, gs, hs in cells:
         by_f.setdefault(fidx, []).append((b, gs, hs))
-    # node totals from feature 0's cells (every row carries every
-    # feature, so any one feature's cells partition the node)
-    g_m = sum(gs for b, gs, hs in by_f[0])
-    h_m = sum(hs for b, gs, hs in by_f[0])
+    f0 = min(active)
+    g_m = sum(gs for _b, gs, _hs in by_f[f0])
+    h_m = sum(hs for _b, _gs, hs in by_f[f0])
     best = None
-    for fidx in range(len(features)):
+    for fidx in active:
         glm = 0
         hlm = 0
         occupied = sorted(by_f.get(fidx, []))
         for b, gs, hs in occupied[:-1]:  # interior candidates only
             glm += gs
             hlm += hs
-            gain = _gain(glm, hlm, g_m, h_m, lam)
+            if mcw_micro and (hlm < mcw_micro or (h_m - hlm) < mcw_micro):
+                continue
+            gain = _gain(glm, hlm, g_m, h_m, lam, alpha_micro)
             if best is None or gain > best[0]:
                 best = (gain, fidx, b, glm, hlm)
     if best is None:
         raise ValueError(
-            "unsplittable node: every feature has a single occupied bin "
-            "— no admissible (non-empty-child) split exists; the input "
-            "is outside the gated GBT domain"
+            "unsplittable node: no admissible split exists (every "
+            "eligible feature single-bin, or no candidate satisfies "
+            "min_child_weight) — the input is outside the gated GBT domain"
         )
     gain_v, fidx, b, glm, hlm = best
     return fidx, b, glm, hlm, g_m, h_m, gain_v
 
 
+# --- tree forms ------------------------------------------------------------------
+
+
 def _tree_logit_on_bins(tree: dict, features: tuple[str, ...]) -> Column:
-    """Tree value over the b_<feature> bin columns of the working
-    frame (the trainer's inner loop — the raw-feature form for
-    serving is :func:`gbt_trained_logit_expr`)."""
-    rf, rb = tree["root"]
-    lf, lb = tree["left"]
-    rrf, rrb = tree["right"]
-    left = F.when(
-        F.col(f"b_{features[lf]}") <= lb, F.lit(tree["w_ll"])
-    ).otherwise(F.lit(tree["w_lr"]))
-    right = F.when(
-        F.col(f"b_{features[rrf]}") <= rrb, F.lit(tree["w_rl"])
-    ).otherwise(F.lit(tree["w_rr"]))
-    return F.when(F.col(f"b_{features[rf]}") <= rb, left).otherwise(right)
+    """Heap tree value over the working frame's b_<feature> bin
+    columns (the trainer's inner loop and the holdout scorers; the
+    raw-feature serving forms are :func:`gbt_trained_logit_expr` and
+    ext/gbt_deep.gbt_deep_logit_expr)."""
+
+    def node_expr(n: int) -> Column:
+        if n in tree["leaves"]:
+            return F.lit(float(tree["leaves"][n]))
+        fidx, b = tree["splits"][n]
+        return F.when(
+            F.col(f"b_{features[fidx]}") <= b, node_expr(2 * n)
+        ).otherwise(node_expr(2 * n + 1))
+
+    return node_expr(1)
+
+
+def _depth2(tree: dict) -> dict:
+    """A depth-2 heap tree in the serving shape :func:`train_gbt`
+    returns: root=splits[1], left=splits[2], right=splits[3],
+    w_ll..w_rr = leaves[4..7]."""
+    s, g, w = tree["splits"], tree["gains"], tree["leaves"]
+    return {
+        "root": s[1], "gain_root": g[1],
+        "left": s[2], "gain_left": g[2], "w_ll": w[4], "w_lr": w[5],
+        "right": s[3], "gain_right": g[3], "w_rl": w[6], "w_rr": w[7],
+    }
+
+
+# --- the descent core ------------------------------------------------------------
+
+
+class Binned(NamedTuple):
+    """A compressed working frame plus the subsample layout its
+    ``__k_<t>`` bucket columns encode (see :func:`binned_frame`)."""
+
+    frame: DataFrame
+    thrs: tuple[int, ...]
+    rounds: int
+
+
+def _sub_layout(configs: tuple[FullConfig, ...]) -> tuple[tuple[int, ...], int]:
+    """(distinct subsample thresholds below 100, ascending; max rounds)."""
+    pcts = {_sub_pct(c[5]) for c in configs}
+    return tuple(sorted(p for p in pcts if p < 100)), max(c[1] for c in configs)
+
+
+def binned_frame(
+    fv: DataFrame,
+    configs: tuple,
+    features: tuple[str, ...] = SCORE_FEATURES,
+    bins: int = GBT_BINS,
+    label: str = "label",
+    scales: dict[str, float] | None = None,
+    fold_col: Column | None = None,
+) -> Binned:
+    """The descent's working frame for ``configs``: distinct (label,
+    [fold], subsample buckets, bins) vectors with exact ``__cnt``
+    multiplicities (see :func:`_compress_binned`; a fold column picks
+    the wide layout). Subsample keys on o_orderkey, but the descent
+    only compares hash60(o_orderkey ‖ '#r<t>') % 100 against the
+    configs' distinct thresholds, so the per-round BUCKET #{thr ≤ h}
+    carries every decision bit (h < thr_j ⟺ bucket < j) and the id
+    itself never enters the frame — rows agreeing on the buckets
+    fold together, and exact fits need no id column at all. The
+    returned thresholds and round count let :func:`_descend` refuse a
+    frame built for other configs. Built once per CV selection, the
+    same frame feeds the trainer and the holdout scorer (one pass for
+    sums several consumers need)."""
+    configs = tuple(map(_as_full, configs))
+    thrs, rounds = _sub_layout(configs)
+
+    def bucket(t: int) -> Column:
+        key = F.concat(F.col("o_orderkey").cast("string"), F.lit(f"#r{t}"))
+        h = hash60(key) % 100
+        b: Column = F.lit(0)
+        for thr in thrs:
+            b = b + (h >= F.lit(thr)).cast("int")
+        return b.alias(f"__k_{t}")
+
+    frame = fv.select(
+        F.col(label).alias("label"),
+        *([] if fold_col is None else [fold_col.cast("int").alias("__fold")]),
+        *([bucket(t) for t in range(rounds)] if thrs else []),
+        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
+    )
+    return Binned(_compress_binned(frame, wide=fold_col is not None), thrs, rounds)
+
+
+def _descend(
+    binned: Binned,
+    configs: tuple,
+    features: tuple[str, ...],
+    folds: int = 0,
+) -> list[list[list[dict]]]:
+    """THE boosting round/level loop — every GBT trainer is a wrapper
+    around it. An *arm* is one (fold, config) pair; ``folds=0`` drops
+    the fold axis (one arm per config over every row). Returns
+    ``trees[fold][cfg]`` as heap-indexed dicts::
+
+        {"depth": d, "splits": {node: (fidx, bin)},
+         "gains": {node: gain}, "leaves": {leaf: w}}
+
+    (root=1, children of n are 2n/2n+1).
+
+    Per (round, level) ONE stacked aggregate carries every arm still
+    active there, grouped by ([fold,] cfg, node, fidx, bin) and
+    collected as ≤ arms·2^L·d·B integer cells (bytes, not rows, cross
+    the wire; the sanctioned model-broadcast class). Each arm's
+    gradients come from its own partial ensemble staged as its own
+    sigmoid column, its node path from its own heap column. Two
+    post-stack filters restrict the rows an arm sums:
+    ``fold != __fold`` keeps exactly the fold's complement, and the
+    subsample bucket rank keeps exactly the rows
+    hash60(o_orderkey ‖ '#r<t>') % 100 < round(100·subsample) selects
+    (RNG-free, append-stable, the oracle's identical predicate);
+    histograms and leaf values cover the selected rows only, the
+    ensemble update every row (XGBoost's semantics). colsample is
+    plan-time: an arm's stack entries enumerate only
+    :func:`col_subset`'s features for the round. scale_pos_weight
+    multiplies g and h before the micro-floor (g·w·1e6);
+    min_child_weight and reg_alpha act in the driver-side
+    :func:`_argmax_split` / :func:`_leaf_w` over the collected cells.
+
+    Per-arm arithmetic is independent and written in one operation
+    order, so an arm's trees are bit-identical whether it runs alone
+    or fused with others, in any partition layout (law-pinned), and
+    the unrolled per-config SQL oracles gate them. The job count is
+    config-width independent: extra arms only add histogram cells and
+    stack rows to the map-side combine, never scans.
+
+    Plan truncation: each arm's partial logit
+    rides as a materialized ``__f_<arm>`` column in a per-round
+    persisted frame — the SQL oracle's own rows{t} discipline — so no
+    plan holds more than ONE tree per arm and every level job reads
+    the computed gradients once. The persist materializes inside the
+    level-0 job; the previous round's frame (the current one's
+    lineage parent) unpersists once its successor materialized, and
+    every persisted frame is released on exceptions too."""
+    configs = tuple(map(_as_full, configs))
+    thrs, max_rounds = _sub_layout(configs)
+    if (binned.thrs, binned.rounds) != (thrs, max_rounds):
+        raise ValueError(
+            f"binned frame encodes subsample thresholds {binned.thrs} over "
+            f"{binned.rounds} rounds, but the configs need {thrs} over "
+            f"{max_rounds} — build it with binned_frame() for these configs"
+        )
+    # h < pct_c ⟺ bucket < rank_c; pct=100 ranks past the last bucket
+    ranks = [
+        thrs.index(p) + 1 if p < 100 else len(thrs) + 1
+        for p in (_sub_pct(c[5]) for c in configs)
+    ]
+    fold_ids = range(max(folds, 1))
+    arms = [(f, c) for f in fold_ids for c in range(len(configs))]
+    trees: list[list[list[dict]]] = [[[] for _ in configs] for _ in fold_ids]
+    # without a fold axis the histogram keys drop the constant fold
+    hist_keys = [*(["fold"] if folds else []), "cfg", "node", "fidx", "bin"]
+    arm_keys = [f"{f}, {c}" if folds else f"{c}" for f, c in arms]
+    b_cols = [f"b_{x}" for x in features]
+
+    def keys(t: int) -> list[str]:
+        return [
+            "label",
+            *(["__fold"] if folds else []),
+            *([f"__k_{t_}" for t_ in range(t, max_rounds)] if thrs else []),
+            *b_cols,
+            "__cnt",
+        ]
+
+    state = binned.frame
+    held: list[DataFrame] = []
+    try:
+        for t in range(max_rounds):
+            live = [a for a, (_f, c) in enumerate(arms) if configs[c][1] > t]
+
+            def z(a: int) -> Column:
+                return F.col(f"__f_{a}") if t else F.lit(0.0)
+
+            staged = state
+            # stage p as a real column (the q_kmeans_train staged-argmin
+            # discipline): gm and hm both read ONE computed sigmoid
+            for a in live:
+                staged = staged.withColumn(
+                    f"__p_{a}",
+                    det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z(a))), 6),
+                )
+            cols: list = [*keys(t), *([f"__f_{a}" for a in live] if t else [])]
+            for a in live:
+                spw = float(configs[arms[a][1]][9])
+                p = F.col(f"__p_{a}")
+                g = p - F.col("label").cast("double")
+                h = p * (F.lit(1.0) - p)
+                if spw != 1.0:
+                    # scale_pos_weight before the micro-floor (g·w·1e6);
+                    # w=1.0 skips the branch — the bits are the same
+                    wgt = F.when(F.col("label") == 1, F.lit(spw)).otherwise(
+                        F.lit(1.0)
+                    )
+                    g, h = g * wgt, h * wgt
+                # ×__cnt: the distinct row stands for cnt identical raw
+                # rows (see _compress_binned) — sums stay exact integers
+                cols.append(
+                    (F.floor(g * F.lit(_MICRO) + F.lit(0.5)).cast("long")
+                     * F.col("__cnt")).alias(f"gm_{a}")
+                )
+                cols.append(
+                    (F.floor(h * F.lit(_MICRO) + F.lit(0.5)).cast("long")
+                     * F.col("__cnt")).alias(f"hm_{a}")
+                )
+            work = staged.select(*cols).persist()
+            held.append(work)
+            actives = {
+                c: col_subset(features, t, configs[c][6])
+                for c in {arms[a][1] for a in live}
+            }
+            nodes: dict[int, Column] = {a: F.lit(1) for a in live}
+            new = {
+                a: {"depth": configs[arms[a][1]][4], "splits": {}, "gains": {},
+                    "leaves": {}}
+                for a in live
+            }
+            for lvl in range(max(configs[arms[a][1]][4] for a in live)):
+                lvl_live = [a for a in live if configs[arms[a][1]][4] > lvl]
+                work_l = work
+                for a in lvl_live:
+                    work_l = work_l.withColumn(f"node_{a}", nodes[a])
+                entries = [
+                    f"{arm_keys[a]}, node_{a}, {i}, b_{features[i]}, gm_{a}, hm_{a}"
+                    for a in lvl_live
+                    for i in actives[arms[a][1]]
+                ]
+                stacked = work_l.selectExpr(
+                    *(["__fold"] if folds else []),
+                    *([f"__k_{t}"] if thrs else []),
+                    f"stack({len(entries)}, {', '.join(entries)}) "
+                    f"AS ({', '.join(hist_keys)}, gm, hm)",
+                )
+                if folds:
+                    stacked = stacked.filter("fold != __fold")
+                if thrs:
+                    rnk = F.element_at(
+                        F.array(*[F.lit(r) for r in ranks]), F.col("cfg") + 1
+                    )
+                    stacked = stacked.filter(F.col(f"__k_{t}") < rnk)
+                rows = (
+                    stacked.groupBy(*hist_keys)
+                    .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
+                    .collect()
+                )
+                if not rows:
+                    # empty input frame: the gated-domain
+                    # contract, not a per-node error — the SQL oracles'
+                    # nz guard error()s identically
+                    raise ValueError(
+                        "empty feature frame: GBT training needs at least "
+                        "one row — outside the gated GBT domain"
+                    )
+                cells: dict[tuple[int, int], dict[int, list]] = {}
+                for r in rows:
+                    key = (r["fold"] if folds else 0, r["cfg"])
+                    cells.setdefault(key, {}).setdefault(r["node"], []).append(
+                        (r["fidx"], r["bin"], r["gs"], r["hs"])
+                    )
+                nodes_at = list(range(2**lvl, 2 ** (lvl + 1)))
+                for a in lvl_live:
+                    f, c = arms[a]
+                    name, _r, _e, lam, depth, _s, _cs, mcw, alpha, _w = configs[c]
+                    by_node = cells.get((f, c), {})
+                    if sorted(by_node) != nodes_at:
+                        raise ValueError(
+                            f"degenerate split in round {t} level {lvl} of "
+                            f"config {name}{f' fold {f}' if folds else ''}: "
+                            f"node(s) {sorted(set(nodes_at) - set(by_node))} "
+                            f"received no rows — the input is outside the "
+                            f"gated depth-{depth} GBT domain"
+                        )
+                    mcw_m, alpha_m = int(round(mcw * 1e6)), int(round(alpha * 1e6))
+                    tree = new[a]
+                    branch = None
+                    for n_id in nodes_at:
+                        fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split(
+                            by_node[n_id], actives[c], lam, mcw_m, alpha_m
+                        )
+                        tree["splits"][n_id] = (fidx, b)
+                        tree["gains"][n_id] = gain
+                        if lvl == depth - 1:
+                            tree["leaves"][2 * n_id] = _leaf_w(glm, hlm, lam, alpha_m)
+                            tree["leaves"][2 * n_id + 1] = _leaf_w(
+                                g_m - glm, h_m - hlm, lam, alpha_m
+                            )
+                        else:
+                            side = F.when(
+                                F.col(f"b_{features[fidx]}") <= b, 0
+                            ).otherwise(1)
+                            if lvl == 0:  # the root level has one node
+                                branch = side
+                            else:
+                                cond = nodes[a] == n_id
+                                branch = (
+                                    F.when(cond, side)
+                                    if branch is None
+                                    else branch.when(cond, side)
+                                )
+                    if lvl < depth - 1:
+                        nodes[a] = nodes[a] * 2 + branch
+            for old in held[:-1]:
+                old.unpersist()
+            del held[:-1]
+            for a in live:
+                trees[arms[a][0]][arms[a][1]].append(new[a])
+            if t + 1 < max_rounds:
+                # f accumulates left-associated in the oracle's op order
+                # (f + η·tree): the doubles — and the trees — are
+                # bit-identical to the unrolled chains
+                state = work.select(
+                    *keys(t + 1),
+                    *[
+                        (
+                            z(a)
+                            + F.lit(float(configs[arms[a][1]][2]))
+                            * _tree_logit_on_bins(new[a], features)
+                        ).alias(f"__f_{a}")
+                        for a in live
+                        if configs[arms[a][1]][1] > t + 1
+                    ],
+                )
+    finally:
+        for fr in held:
+            fr.unpersist()
+    return trees
+
+
+def _fit(
+    fv: DataFrame,
+    configs: tuple,
+    features: tuple[str, ...],
+    bins: int,
+    label: str,
+    scales: dict[str, float] | None,
+) -> list[list[dict]]:
+    """Every config fused over all of ``fv`` (no fold axis):
+    ``trees[cfg]`` heap trees."""
+    binned = binned_frame(fv, configs, features, bins, label, scales)
+    return _descend(binned, configs, features)[0]
+
+
+def _rank_sum_aucs(
+    parts: list[DataFrame],
+    trees: list[list[list[dict]]],
+    configs: tuple,
+    features: tuple[str, ...],
+) -> list[list[float]]:
+    """Round6 holdout rank-sum AUCs ``out[cfg][fold]``: ``parts[f]``
+    is fold f's held-out frame (label, ``__cnt``, b_<feature>) and
+    ``trees[f][cfg]`` the heap trees trained without it. Per fold ONE
+    scan stages every config's round6 sigmoid as a column (cascades
+    over the staged bins — same long bins, same comparisons, same
+    leaf doubles as the raw-feature form) and stacks them long; the
+    union feeds ONE exact Mann-Whitney aggregate with average-rank
+    ties — q_model_card's reduction, windowed per (fold, cfg) over
+    the bounded distinct-score table, with group counts Σ __cnt /
+    Σ __cnt·label (the raw-row integers). Driver state:
+    3·folds·|configs| scalars."""
+    k = len(configs)
+    scored = None
+    for f, va in enumerate(parts):
+
+        def ens(c: int) -> Column:
+            z: Column = F.lit(0.0)
+            for tr in trees[f][c]:
+                z = z + F.lit(float(configs[c][2])) * _tree_logit_on_bins(
+                    tr, features
+                )
+            return z
+
+        staged = va.select(
+            "label",
+            "__cnt",
+            *[
+                det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-ens(c))), 6).alias(
+                    f"s_{c}"
+                )
+                for c in range(k)
+            ],
+        )
+        pairs = ", ".join(f"{c}, s_{c}" for c in range(k))
+        part = staged.selectExpr(
+            f"{f} AS fold", "label", "__cnt", f"stack({k}, {pairs}) AS (cfg, s)"
+        )
+        scored = part if scored is None else scored.unionAll(part)
+    grp = scored.groupBy("fold", "cfg", "s").agg(
+        F.sum("__cnt").alias("n"),
+        F.sum(F.col("label").cast("long") * F.col("__cnt")).alias("np"),
+    )
+    w = (
+        Window.partitionBy("fold", "cfg")
+        .orderBy("s")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = grp.withColumn("cum_n", F.coalesce(F.sum("n").over(w), F.lit(0)))
+    # the model_metrics avg-rank text, per (fold, cfg)
+    avg_rank = (F.col("cum_n") + (F.col("n") + 1) / 2.0).cast("decimal(28,1)")
+    rs = F.col("np").cast("decimal(28,1)") * avg_rank
+    agg = cum.groupBy("fold", "cfg").agg(
+        F.sum(rs).alias("rank_sum"),
+        F.sum("np").alias("n_pos"),
+        (F.sum("n") - F.sum("np")).alias("n_neg"),
+    )
+    by_key = {(r["fold"], r["cfg"]): r for r in agg.collect()}
+
+    def auc(r) -> float:
+        n_pos, n_neg = int(r["n_pos"]), int(r["n_neg"])
+        if n_pos == 0 or n_neg == 0:
+            return 0.0
+        raw = (float(r["rank_sum"]) - float(n_pos) * (n_pos + 1) / 2) / (
+            float(n_pos) * n_neg
+        )
+        return _r6(raw)
+
+    return [[auc(by_key[(f, c)]) for f in range(len(parts))] for c in range(k)]
+
+
+# --- the depth-2 trainer -----------------------------------------------------------
 
 
 def train_gbt(
@@ -286,13 +738,11 @@ def train_gbt(
     scales: dict[str, float] | None = None,
     pos_weight: float | None = None,
 ) -> list[dict]:
-    """Fit ``rounds`` depth-2 trees by histogram gradient boosting.
-
-    Each round: compile the partial ensemble to a row-local logit,
-    micro-floor gradients/hessians, then TWO distributed aggregates —
-    (feature, bin) for the root split, (node, feature, bin) for the
-    child splits — each collecting ≤ nodes·d·B integer cells (the
-    sanctioned model-broadcast class). Returns the tree list; leaf
+    """Fit ``rounds`` depth-2 trees by histogram gradient boosting —
+    one arm of :func:`_descend`: per round TWO distributed aggregates
+    (root histogram, children histogram), each collecting ≤
+    nodes·d·B integer cells. Returns the tree list in the depth-2
+    serving shape (root/left/right splits, gain_*, w_ll..w_rr); leaf
     values are full-precision doubles (round only at the output
     boundary).
 
@@ -303,117 +753,9 @@ def train_gbt(
     −G/(H+λ) are naturally weighted (no n_eff: the weights flow
     through both numerator and denominator).
     """
-    binned = _compress_binned(
-        fv.select(
-            F.col(label).alias("label"),
-            *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-        )
-    )
-    wgt: Column | None = (
-        None
-        if pos_weight is None
-        else F.when(F.col("label") == 1, F.lit(float(pos_weight))).otherwise(
-            F.lit(1.0)
-        )
-    )
-    trees: list[dict] = []
-    # r17 (guide §3.3 plan truncation / §1.2): the partial ensemble's
-    # logit rides as a materialized __f column in a per-round persisted
-    # frame — the SQL oracle's own rows{t} discipline — so no plan ever
-    # holds more than ONE tree cascade and both level jobs (root +
-    # children histograms) read the computed gm/hm once. f accumulates
-    # left-associated in the identical op order (f + η·tree): the
-    # doubles — and the trees — are bit-identical (law-pinned).
-    state = binned
-    prev_work = None
-    for _t in range(rounds):
-        z: Column = F.col("__f") if trees else F.lit(0.0)
-        # stage p as a real column (the q_kmeans_train staged-argmin
-        # discipline): gm and hm both read ONE computed sigmoid value
-        staged = state.withColumn(
-            "__p", det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-        )
-        p = F.col("__p")
-        g = p - F.col("label").cast("double")
-        h = p * (F.lit(1.0) - p)
-        gc = g * F.lit(_MICRO) if wgt is None else g * wgt * F.lit(_MICRO)
-        hc = h * F.lit(_MICRO) if wgt is None else h * wgt * F.lit(_MICRO)
-        work = staged.select(
-            "label",
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *([F.col("__f")] if trees else []),
-            # gm/hm carry the row's multiplicity: cnt·floor(g·1e6+.5)
-            # sums to the exact raw-row total (see _compress_binned)
-            (F.floor(gc + F.lit(0.5)).cast("long") * F.col("__cnt")).alias("gm"),
-            (F.floor(hc + F.lit(0.5)).cast("long") * F.col("__cnt")).alias("hm"),
-        ).persist()
-        n_f = len(features)
-        pairs = ", ".join(f"{i}, b_{f}" for i, f in enumerate(features))
-        stacked = work.selectExpr(
-            "gm", "hm", f"stack({n_f}, {pairs}) AS (fidx, bin)"
-        )
-        h1 = (
-            stacked.groupBy("fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        cells = [(r["fidx"], r["bin"], r["gs"], r["hs"]) for r in h1]
-        rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
-            cells, features, lam
-        )
-
-        node = F.when(F.col(f"b_{features[rfidx]}") <= rbin, 0).otherwise(1)
-        stacked2 = work.withColumn("node", node).selectExpr(
-            "node", "gm", "hm", f"stack({n_f}, {pairs}) AS (fidx, bin)"
-        )
-        h2 = (
-            stacked2.groupBy("node", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        by_node: dict[int, list] = {}
-        for r in h2:
-            by_node.setdefault(r["node"], []).append(
-                (r["fidx"], r["bin"], r["gs"], r["hs"])
-            )
-        if sorted(by_node) != [0, 1]:
-            raise ValueError(
-                f"degenerate root split in round {_t}: child node(s) "
-                f"{sorted({0, 1} - set(by_node))} are empty — the input "
-                "frame has too little feature variation for depth-2 trees"
-            )
-        tree = {"root": (rfidx, rbin), "gain_root": rgain}
-        for n_id, side in ((0, "left"), (1, "right")):
-            cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
-                by_node[n_id], features, lam
-            )
-            tree[side] = (cfidx, cbin)
-            tree[f"gain_{side}"] = cgain
-            wl = _leaf_w(glm, hlm, lam)
-            wr = _leaf_w(g_m - glm, h_m - hlm, lam)
-            if n_id == 0:
-                tree["w_ll"], tree["w_lr"] = wl, wr
-            else:
-                tree["w_rl"], tree["w_rr"] = wl, wr
-        had_trees = bool(trees)
-        trees.append(tree)
-        if _t + 1 < rounds:
-            state = work.select(
-                "label",
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                (
-                    (F.col("__f") if had_trees else F.lit(0.0))
-                    + F.lit(float(eta)) * _tree_logit_on_bins(tree, features)
-                ).alias("__f"),
-            )
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees
+    cfg = ("gbt", rounds, eta, lam, 2, 1.0, 1.0, 0.0, 0.0,
+           1.0 if pos_weight is None else pos_weight)
+    return [_depth2(t) for t in _fit(fv, (cfg,), features, bins, label, scales)[0]]
 
 
 def gbt_trained_logit_expr(
@@ -856,160 +1198,16 @@ def train_gbt_grid(
 ) -> list[list[dict]]:
     """Fit EVERY grid config in max(rounds)·2 shared scans — the
     multi-model fusion of :func:`train_gbt` (train_logreg_grid's
-    shared-scan discipline for boosting): per round, ONE stacked
-    aggregate computes all still-active configs' (feature, bin) root
-    histograms side by side, and ONE their (node, feature, bin) child
-    histograms (each config's gradients come from its own partial
-    ensemble staged as its own sigmoid column; its node column from
-    its own root split). Per-config arithmetic is INDEPENDENT and
-    written in the identical operation order as the sequential fold,
-    so the returned tree lists are bit-identical to calling train_gbt
-    per config (law-pinned in tests/test_gbt.py) and the unrolled
-    per-config SQL oracle still gates them. At 100 TB each extra
-    config is ≤ 2·d·B more integer cells in the same map-side
+    shared-scan discipline for boosting): each config is one depth-2
+    arm of :func:`_descend`, so per (round, level) ONE stacked
+    aggregate computes every still-active config's histograms side by
+    side. The returned tree lists are bit-identical to calling
+    train_gbt per config (law-pinned in tests/test_gbt.py) and the
+    unrolled per-config SQL oracle still gates them. At 100 TB each
+    extra config is ≤ 2·d·B more integer cells in the same map-side
     combine — the scan is shared, the histograms stay bytes."""
-    binned = fv.select(
-        F.col(label).alias("label"),
-        *[_bin_expr(f, scales, bins).alias(f"b_{f}") for f in features],
-    )
-    binned = _compress_binned(binned)
-    k = len(configs)
-    trees_all: list[list[dict]] = [[] for _ in configs]
-    max_rounds = max(r for _n, r, _e, _l in configs)
-    n_f = len(features)
-    # r17: partial-logit __f_<c> columns + per-round persisted frame —
-    # the rows{t} plan-truncation discipline (see train_gbt's comment);
-    # every plan holds at most one tree per config.
-    state = binned
-    carried: list[int] = []
-    prev_work = None
-    for t in range(max_rounds):
-        active = [c for c in range(k) if configs[c][1] > t]
-
-        def f_expr(c: int) -> Column:
-            return F.col(f"__f_{c}") if c in carried else F.lit(0.0)
-
-        staged = state
-        for c in active:
-            staged = staged.withColumn(
-                f"__p_{c}",
-                det_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-f_expr(c))), 6),
-            )
-        cols = [
-            "label",
-            *[f"b_{f}" for f in features],
-            "__cnt",
-            *[F.col(f"__f_{c}") for c in carried if c in active],
-        ]
-        for c in active:
-            p = F.col(f"__p_{c}")
-            g = p - F.col("label").cast("double")
-            h = p * (F.lit(1.0) - p)
-            # ×__cnt: the distinct row stands for cnt identical raw
-            # rows (see _compress_binned) — sums stay exact integers
-            cols.append(
-                (F.floor(g * F.lit(_MICRO) + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"gm_{c}")
-            )
-            cols.append(
-                (F.floor(h * F.lit(_MICRO) + F.lit(0.5)).cast("long")
-                 * F.col("__cnt")).alias(f"hm_{c}")
-            )
-        work = staged.select(*cols).persist()
-        entries = ", ".join(
-            f"{c}, {i}, b_{f}, gm_{c}, hm_{c}"
-            for c in active
-            for i, f in enumerate(features)
-        )
-        stacked = work.selectExpr(
-            f"stack({len(active) * n_f}, {entries}) AS (cfg, fidx, bin, gm, hm)"
-        )
-        h1 = (
-            stacked.groupBy("cfg", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        roots: dict[int, tuple[int, int, float]] = {}
-        for c in active:
-            lam_c = float(configs[c][3])
-            cells = [
-                (r["fidx"], r["bin"], r["gs"], r["hs"]) for r in h1 if r["cfg"] == c
-            ]
-            rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
-                cells, features, lam_c
-            )
-            roots[c] = (rfidx, rbin, rgain)
-        work2 = work
-        for c in active:
-            rfidx, rbin, _g = roots[c]
-            work2 = work2.withColumn(
-                f"node_{c}",
-                F.when(F.col(f"b_{features[rfidx]}") <= rbin, 0).otherwise(1),
-            )
-        entries2 = ", ".join(
-            f"{c}, node_{c}, {i}, b_{f}, gm_{c}, hm_{c}"
-            for c in active
-            for i, f in enumerate(features)
-        )
-        stacked2 = work2.selectExpr(
-            f"stack({len(active) * n_f}, {entries2}) AS (cfg, node, fidx, bin, gm, hm)"
-        )
-        h2 = (
-            stacked2.groupBy("cfg", "node", "fidx", "bin")
-            .agg(F.sum("gm").alias("gs"), F.sum("hm").alias("hs"))
-            .collect()
-        )
-        if prev_work is not None:
-            prev_work.unpersist()
-        prev_work = work
-        for c in active:
-            lam_c = float(configs[c][3])
-            rfidx, rbin, rgain = roots[c]
-            by_node: dict[int, list] = {}
-            for r in h2:
-                if r["cfg"] == c:
-                    by_node.setdefault(r["node"], []).append(
-                        (r["fidx"], r["bin"], r["gs"], r["hs"])
-                    )
-            if sorted(by_node) != [0, 1]:
-                raise ValueError(
-                    f"degenerate root split in round {t} of config "
-                    f"{configs[c][0]}: child node(s) "
-                    f"{sorted({0, 1} - set(by_node))} are empty"
-                )
-            tree = {"root": (rfidx, rbin), "gain_root": rgain}
-            for n_id, side in ((0, "left"), (1, "right")):
-                cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
-                    by_node[n_id], features, lam_c
-                )
-                tree[side] = (cfidx, cbin)
-                tree[f"gain_{side}"] = cgain
-                wl = _leaf_w(glm, hlm, lam_c)
-                wr = _leaf_w(g_m - glm, h_m - hlm, lam_c)
-                if n_id == 0:
-                    tree["w_ll"], tree["w_lr"] = wl, wr
-                else:
-                    tree["w_rl"], tree["w_rr"] = wl, wr
-            trees_all[c].append(tree)
-        if t + 1 < max_rounds:
-            nxt = [c for c in range(k) if configs[c][1] > t + 1]
-            state = work.select(
-                "label",
-                *[f"b_{f}" for f in features],
-                "__cnt",
-                *[
-                    (
-                        f_expr(c)
-                        + F.lit(float(configs[c][2]))
-                        * _tree_logit_on_bins(trees_all[c][-1], features)
-                    ).alias(f"__f_{c}")
-                    for c in nxt
-                ],
-            )
-            carried = nxt
-    if prev_work is not None:
-        prev_work.unpersist()
-    return trees_all
+    fits = _fit(fv, configs, features, bins, label, scales)
+    return [[_depth2(t) for t in ts] for ts in fits]
 
 
 _H60_OK = "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100"

@@ -282,9 +282,10 @@ def q_model_selection_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-validated ROC AUC (`fraud_detector.py:268-271`:
     cross_val_score(cv=3, scoring='roc_auc').mean()) — next to (not
     replacing) q_gbt_model_selection's holdout log-loss. Folds =
-    hash60(o_orderkey) % 3 (q_kfold's deterministic assignment); per
-    fold the FUSED depth-2 grid fits all 4 configs on the complement,
-    ONE stacked scan scores the held-out fold, and one distributed
+    hash60(o_orderkey) % 3 (q_kfold's deterministic assignment); ONE
+    fold-fused descent fits all 12 (fold, config) depth-2 models, each
+    on its fold's complement, ONE stacked scan per fold scores the
+    held-out folds, and one distributed
     rank-sum aggregate (q_model_card's exact Mann-Whitney machinery,
     windowed per (fold, config) over the bounded distinct-score
     table) yields all 12 fold AUCs; per config the round6

@@ -386,8 +386,8 @@ def q_model_selection_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's actual objective, 3-fold cross-validated ROC AUC
     (`fraud_detector.py:249-271`: the trial dict feeds
     cross_val_score(cv=3, scoring='roc_auc').mean()). Composition of
-    two proven folds: per fold the fused FULL-space trainer
-    (train_gbt_grid_full) fits all 4 trials on the complement —
+    two proven folds: ONE fold-fused FULL-space descent fits all 12
+    (fold, trial) models, each on its fold's complement —
     subsample/colsample/scale_pos_weight/mcw/L1 riding the shared
     per-(round, level) scan — then ONE stacked scan per fold and one
     rank-sum aggregate yield all 12 (fold, trial) AUCs; per trial the

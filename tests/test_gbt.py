@@ -70,14 +70,14 @@ def gbt_numpy_replay(X, y, features, rounds, bins, lam, eta, scales):
         hm = np.floor(h * 1e6 + 0.5).astype(np.int64)
         all_rows = np.ones(n, dtype=bool)
         rfidx, rbin, _glm, _hlm, _gm, _hm, rgain = _argmax_split(
-            _hist(fidxs, B, gm, hm, all_rows), features, lam
+            _hist(fidxs, B, gm, hm, all_rows), tuple(fidxs), lam
         )
         tree = {"root": (rfidx, rbin), "gain_root": rgain}
         left_mask = B[:, rfidx] <= rbin
         for n_id, side, mask in ((0, "left", left_mask), (1, "right", ~left_mask)):
             assert mask.any(), "degenerate split in replay"
             cfidx, cbin, glm, hlm, g_m, h_m, cgain = _argmax_split(
-                _hist(fidxs, B, gm, hm, mask), features, lam
+                _hist(fidxs, B, gm, hm, mask), tuple(fidxs), lam
             )
             tree[side] = (cfidx, cbin)
             tree[f"gain_{side}"] = cgain

@@ -33,10 +33,10 @@ from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import (
     GBT_ETA,
     GBT_LAMBDA,
     GBT_ROUNDS,
+    _argmax_split,
     train_gbt,
 )
 from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_deep import (
-    _argmax_split_sub,
     _leaf_w,
     col_subset,
     train_gbt_deep,
@@ -121,7 +121,7 @@ def gbt_deep_numpy_replay(
             for n_id in range(2**lvl, 2 ** (lvl + 1)):
                 m = masks[n_id] & sel
                 assert m.any(), "degenerate node in replay"
-                fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split_sub(
+                fidx, b, glm, hlm, g_m, h_m, gain = _argmax_split(
                     _hist(active, B, gm, hm, m), active, lam
                 )
                 tree["splits"][n_id] = (fidx, b)
@@ -785,3 +785,57 @@ def test_fold_fused_cv_trainers_match_per_fold_loop(spark):
             df.filter(fold_col != f), configs=cfgsF, features=FEATS, scales={}
         )
         assert fusedF[f] == seqF, f"full-space fold {f} diverged"
+
+
+def test_trainers_release_persisted_frames_when_descent_raises(spark):
+    """A trainer (or CV scorer) that raises mid-descent must not leak
+    its per-round persisted working frame — nor the scorer's shared
+    binned frame — into the session: the cache holds exactly the RDDs
+    it held before the failed call."""
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import gbt_cv_fold_aucs
+
+    sc = spark.sparkContext
+    const = spark.createDataFrame(
+        [(i, 0.5, 0.5, i % 2) for i in range(60)],
+        "o_orderkey long, x1 double, x2 double, label int",
+    )
+    df, X, y, ids = _frame(spark)
+    failing = (
+        lambda: train_gbt(const, features=("x1", "x2"), scales={}),
+        lambda: train_gbt_deep(
+            df, features=FEATS, scales={}, depth=2,
+            min_child_weight=0.25 * len(y),
+        ),
+        lambda: gbt_cv_fold_aucs(
+            const, configs=(("a", 2, 0.3, 1.0),), features=("x1", "x2"),
+            scales={},
+        ),
+    )
+    for call in failing:
+        before = sc._jsc.getPersistentRDDs().size()
+        with pytest.raises(ValueError, match="unsplittable"):
+            call()
+        assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_descent_rejects_binned_frame_built_for_other_configs(spark):
+    """The working frame encodes its configs' subsample thresholds as
+    bucket columns; a frame built for one config set and passed with
+    configs whose subsample percentages differ would select the wrong
+    rows, so the descent refuses it."""
+    from pyspark.sql import functions as F
+
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt import binned_frame
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.gbt_cv import train_gbt_grid_full_cv
+    from real_time_fraud_revenue_intelligence_lakehouse_spark.ext.text import hash60
+
+    df, *_ = _frame(spark)
+    fold_col = F.pmod(hash60(F.col("o_orderkey").cast("string")), F.lit(3))
+    built_for = (("a", 2, 0.3, 1.0, 2, 0.7, 1.0, 0.0, 0.0, 1.0),)
+    trained_with = (("a", 2, 0.3, 1.0, 2, 0.85, 1.0, 0.0, 0.0, 1.0),)
+    binned = binned_frame(df, built_for, FEATS, scales={}, fold_col=fold_col)
+    with pytest.raises(ValueError, match="binned frame"):
+        train_gbt_grid_full_cv(
+            df, fold_col, trained_with, features=FEATS, scales={},
+            binned=binned,
+        )

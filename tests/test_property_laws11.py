@@ -95,9 +95,9 @@ def test_argmax_split_is_the_brute_force_max(cells):
                 keep = (fidx, b, glm, hlm)
     if best is None:
         with pytest.raises(ValueError, match="unsplittable"):
-            _argmax_split(cs, FEATURES, lam)
+            _argmax_split(cs, tuple(range(len(FEATURES))), lam)
         return
-    got = _argmax_split(cs, FEATURES, lam)
+    got = _argmax_split(cs, tuple(range(len(FEATURES))), lam)
     assert got[:4] == keep
     assert got[4:6] == (g_m, h_m)
     assert got[6] == -best[0]
